@@ -36,10 +36,14 @@ case class DumpState(
 }
 
 object DumpState {
+  /** Shared by every parse: a configured ObjectMapper is thread-safe,
+    * and building one per line dominated reading a long state history.
+    */
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
   /** Minimal JSON parse via Jackson (bundled with Spark). */
   def fromJson(json: String): DumpState = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = m.readTree(json)
+    val node = mapper.readTree(json)
     def str(f: String) = Option(node.get(f)).map(_.asText()).orNull
     val offsets = Option(node.get("offsets")).map { o =>
       o.properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
@@ -49,9 +53,13 @@ object DumpState {
       str("transformer_id"))
   }
 
-  /** Arg-max by dump_date = "current" state (kafka_client.py:343-344). */
+  /** Arg-max by dump_date = "current" state (kafka_client.py:343-344).
+    * `states` is in save order and dump_date has one-second resolution,
+    * so among tied states the last one saved wins: two reloads of a
+    * topic within one second must leave the second one current.
+    */
   def latest(states: Seq[DumpState]): Option[DumpState] =
-    states.maxByOption(_.dump_date)
+    states.reverseIterator.maxByOption(_.dump_date)
 }
 
 /** State persistence boundary. Production analog: a compacted Kafka

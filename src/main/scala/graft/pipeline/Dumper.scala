@@ -114,23 +114,15 @@ class Dumper(spark: SparkSession) {
     var cumulative = 0L
     val names = for (f <- parts) yield {
       val name = f"$dumpId-$cumulative%015d.parquet"
+      val rows = ParquetFiles.rowCount(f, conf)
       // FileSystem.rename reports failure by RETURNING false, not
       // throwing — a silently-kept part-* name would corrupt the
       // lexicographic-order contract
       if (!fs.rename(f.getPath, new HPath(dir, name)))
         throw new java.io.IOException(s"rename failed: ${f.getPath} -> $dir/$name")
-      cumulative += footerRowCount(fs, new HPath(dir, name))
+      cumulative += rows
       name
     }
     names.toSeq
-  }
-
-  /** Row count from the parquet footer (metadata-only read). */
-  private def footerRowCount(fs: FileSystem, p: HPath): Long = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val in = HadoopInputFile.fromPath(p, fs.getConf)
-    val r = ParquetFileReader.open(in)
-    try r.getRecordCount finally r.close()
   }
 }

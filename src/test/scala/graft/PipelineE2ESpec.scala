@@ -29,9 +29,9 @@ class PipelineE2ESpec extends AnyFunSuite {
 
   test("pipeline command: dump → reload → decode → t14/t26 match direct runs") {
     val dest = tmp("graft-e2e-dump")
-    // NOT pre-created: ParquetRecordSink treats an existing dir as a
-    // written topic and reads it for end offsets — mirroring a Kafka
-    // sink, a fresh topic is one that does not exist yet
+    // not pre-created: mirroring a Kafka sink, a fresh topic is one
+    // that does not exist yet (ParquetRecordSink reads a missing or an
+    // empty directory as offset 0)
     val sink = tmp("graft-e2e-sink") + "/topic"
     val corpus = tmp("graft-e2e-corpus")
     val dumpId = "20240101000000"

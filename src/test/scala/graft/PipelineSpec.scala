@@ -199,9 +199,23 @@ class PipelineSpec extends AnyFunSuite {
     val b = DumpState("d2", "t", Map(), 200, "Identity")
     assert(DumpState.latest(Seq(a, b)).contains(b))
     assert(DumpState.latest(Nil).isEmpty)
+    // dump_date has one-second resolution: among ties the last saved wins
+    val b2 = DumpState("d3", "t", Map(), 200, "Identity")
+    assert(DumpState.latest(Seq(a, b, b2)).contains(b2))
+    assert(DumpState.latest(Seq(b2, a, b)).contains(b))
     assert(!DumpState("d", null, Map(), 1, "x").matches("t", "d", "x"))
     assert(DumpState("d", "t", Map(), 1, "x").matches("t", "d", "x"))
     assert(!DumpState("d", "t", Map(), 1, "x").matches("t", "d", "y"))
+  }
+
+  test("state store: of two saves in the same second, the second is current") {
+    val store = new FileStateStore(Files.createTempDirectory("graft-state").toString)
+    val first = DumpState("d1", "t", Map("0" -> 0L), 1700000000L, "Identity")
+    val second = DumpState("d2", "t", Map("0" -> 350L), 1700000000L, "Identity")
+    store.save(first)
+    store.save(second)
+    assert(store.latestMatching("t", "d2", "Identity").contains(second))
+    assert(store.latestMatching("t", "d1", "Identity").isEmpty)
   }
 
   test("catalog: lexicographic max = latest dump; files sorted; empty dump throws") {
