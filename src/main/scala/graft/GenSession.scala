@@ -2,10 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared session boot for the corpus-generator mains (GenSf1Full /
-  * GenSf10Gate / GenSf10Full): one place for the env-driven width and
-  * the nanos-timestamp legacy conf, so a config fix cannot land in one
-  * generator but not another and quietly produce divergent corpora.
+/** Shared session boot for the corpus mains (GenCorpus, CellStats):
+  * one place for the env-driven width and the nanos-timestamp legacy
+  * conf, so a config fix cannot land in one of them but not the other.
   */
 private[graft] object GenSession {
   def local(): SparkSession = {

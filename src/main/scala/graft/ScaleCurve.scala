@@ -40,7 +40,18 @@ import org.apache.spark.sql.functions._
   */
 object ScaleCurve {
 
-  private val copies = 10
+  private val copies = GenCorpus.copies("sf1")
+
+  /** Root of the source corpora (sf0.001, sf0.01, sf0.1). */
+  private[graft] def testdata: String =
+    sys.env.getOrElse("SPARK_GRAFT_TESTDATA", "/root/testdata")
+
+  /** Directory of a generated rung ("sf1", "sf3", "sf10", ...):
+    * `SPARK_GRAFT_SF<n>_DIR`, or else `target/scalecurve/<rung>`.
+    */
+  private[graft] def rungDir(rung: String): String =
+    sys.env.getOrElse(s"SPARK_GRAFT_${rung.toUpperCase}_DIR",
+      s"target/scalecurve/$rung")
 
   /** Structure-preserving disjoint replication at an arbitrary copy
     * count (see object scaladoc). `tables` selects which tables the
@@ -179,7 +190,7 @@ object ScaleCurve {
     * (the margin criterion doing its job on a degenerate corpus, but
     * a gate row that proved nothing). Explode-based like documents,
     * not an nCopies-way union (plan stays O(1) in nCopies). Public so
-    * GenSf10Gate can complete a deep corpus that was generated
+    * GenCorpus can complete a deep corpus that was generated
     * documents/events-only.
     */
   def genEmbeddings(spark: SparkSession, srcDir: String, outDir: String,
@@ -507,9 +518,8 @@ object ScaleCurve {
   }
 
   def main(args: Array[String]): Unit = {
-    val base = sys.env.getOrElse("SPARK_GRAFT_TESTDATA", "/root/testdata")
-    val gen = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR",
-      "/root/repo/target/scalecurve/sf1")
+    val base = testdata
+    val gen = rungDir("sf1")
     val out = sys.env.getOrElse("SPARK_GRAFT_CURVE_OUT",
       "/root/repo/SCALECURVE.json")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -551,15 +561,8 @@ object ScaleCurve {
       .filter(_.nonEmpty)
     if (patchSel.isDefined) {
       patchDeep(spark, out, patchSel.get,
-        Seq("sf1" -> gen,
-            "sf3" -> sys.env.getOrElse("SPARK_GRAFT_SF3_DIR",
-              "/root/repo/target/scalecurve/sf3"),
-            "sf10" -> sys.env.getOrElse("SPARK_GRAFT_SF10_DIR",
-              "/root/repo/target/scalecurve/sf10"),
-            "sf30" -> sys.env.getOrElse("SPARK_GRAFT_SF30_DIR",
-              "/root/repo/target/scalecurve/sf30")),
-        sys.env.getOrElse("SPARK_GRAFT_SF100_DIR",
-          "/root/repo/target/scalecurve/sf100"),
+        Seq("sf1", "sf3", "sf10", "sf30").map(r => r -> rungDir(r)),
+        rungDir("sf100"),
         sys.env.getOrElse("SPARK_GRAFT_SF100", "1") != "0")
       spark.stop(); return
     }
@@ -648,30 +651,29 @@ object ScaleCurve {
       "deeper points produced by the CandCount main per deep corpus and " +
       "preserved across regens; exp_top2 fits the largest adjacent pair"
     // ---- deep curve: sf1 / sf3 / sf10 for the fixed-cost-dominated ops
-    val gen3 = sys.env.getOrElse("SPARK_GRAFT_SF3_DIR",
-      "/root/repo/target/scalecurve/sf3")
-    val gen10 = sys.env.getOrElse("SPARK_GRAFT_SF10_DIR",
-      "/root/repo/target/scalecurve/sf10")
-    val gen30 = sys.env.getOrElse("SPARK_GRAFT_SF30_DIR",
-      "/root/repo/target/scalecurve/sf30")
+    val gen3 = rungDir("sf3")
+    val gen10 = rungDir("sf10")
+    val gen30 = rungDir("sf30")
     val deepTables = Set("documents", "events")
     genScaled(spark, s"$base/sf0.1", gen3, 30, deepTables)
-    genScaled(spark, s"$base/sf0.1", gen10, 100, deepTables)
+    genScaled(spark, s"$base/sf0.1", gen10, GenCorpus.copies("sf10"),
+      deepTables)
     // sf30 (300x sf0.1): q24/d10 are still partly fixed-cost-bound at
     // sf10 (measured sf3->sf10 wall ratios 1.1-2.2), so the fit pair
     // moves up another 3x to where the data term is unambiguous
-    genScaled(spark, s"$base/sf0.1", gen30, 300, deepTables)
+    genScaled(spark, s"$base/sf0.1", gen30, GenCorpus.copies("sf30"),
+      deepTables)
     // sf100 (1000x sf0.1, ~5M docs): ONLY d8/d22 climb this far —
     // they are the two ops whose sf10→sf30 exponents sit at ~1.0
     // rather than clearly below it, so "survives 100×" for them
     // deserves a measured 3.3× decade on top of sf30 instead of an
     // extrapolation. Documents-only: both ops read nothing else.
     // SPARK_GRAFT_SF100=0 skips (quick artifact refreshes).
-    val gen100 = sys.env.getOrElse("SPARK_GRAFT_SF100_DIR",
-      "/root/repo/target/scalecurve/sf100")
+    val gen100 = rungDir("sf100")
     val sf100On = sys.env.getOrElse("SPARK_GRAFT_SF100", "1") != "0"
     if (sf100On)
-      genScaled(spark, s"$base/sf0.1", gen100, 1000, Set("documents"))
+      genScaled(spark, s"$base/sf0.1", gen100, GenCorpus.copies("sf100"),
+        Set("documents"))
     val deepScales = Seq("sf1" -> gen, "sf3" -> gen3, "sf10" -> gen10,
                          "sf30" -> gen30)
     val deepN: Map[(String, String), Long] = (for {

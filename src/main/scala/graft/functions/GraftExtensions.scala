@@ -2,33 +2,33 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.graftnative.{
-  AsOfJoinStrategy, CosineSimilarity, PushFilterThroughAsOfJoin, Shingles}
+  AsOfJoinStrategy, GraftNative, PushFilterThroughAsOfJoin}
 
 /** SparkSessionExtensions entry point: registers the engine's native
   * surface permanently for a session built with
   * `.withExtensions(new GraftExtensions)` or via
   * `spark.sql.extensions=graft.functions.GraftExtensions`:
   *
-  *   - `cosine_sim` codegen expression (function injection);
+  *   - every function in `GraftNative.functions` (`cosine_sim`,
+  *     `shingles`, `bloom_filter_agg`, `might_contain`);
   *   - the native as-of join's planner strategy + filter-pushdown
   *     optimizer rule (plan injection) — the full custom-operator
   *     stack (`org.apache.spark.sql.graftnative.AsOfJoin*`).
   *
-  * Sessions not built with extensions (the driver's Verify/Bench)
-  * get the as-of pieces lazily via `AsOfJoinApi.ensureRegistered`.
+  * Sessions not built with extensions (the Verify/Bench sessions) get
+  * the same surface lazily from `GraftNative.install`, which the query
+  * sites call.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("shingles"),
-      new ExpressionInfo(classOf[Shingles].getName, "shingles"),
-      (exprs: Seq[Expression]) => Shingles(exprs(0), exprs(1))))
+    GraftNative.functions.foreach { case (name, cls, build) =>
+      ext.injectFunction((
+        new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name),
+        build))
+    }
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
     ext.injectOptimizerRule(_ => PushFilterThroughAsOfJoin)
   }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftnative.{Bridge, CdcChunkHashes, CosineSimilarity, DotProduct, LongDotProduct, MaxSim, Md5PrefixLong, MinHash8, NearestSeed, SimHash16, SortedIntersectSize, SqDistance, SqDistList, TokenStats}
 
 /** User-facing API for the native vector expressions. */
@@ -102,9 +102,4 @@ object VectorFunctions {
     */
   def sqDistance(a: Column, b: Column): Column =
     Bridge.column(SqDistance(Bridge.expression(a), Bridge.expression(b)))
-
-  /** SQL registration: SELECT cosine_sim(a, b) ... (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
 }

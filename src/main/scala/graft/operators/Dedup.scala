@@ -345,7 +345,7 @@ object Dedup {
     * a pipelined Generate node. Counts per language pin the rowset.
     */
   val d7ShingleGenerator: Q = (s, d) => {
-    org.apache.spark.sql.graftnative.ShinglesApi.ensureRegistered(s)
+    org.apache.spark.sql.graftnative.GraftNative.install(s)
     documents(s, d)
       .select(col("lang"), expr("shingles(text, 3)").as("shingle"))
       .groupBy(col("lang"))
@@ -389,7 +389,7 @@ object Dedup {
   private[graft] def d8Build(s: SparkSession, d: String)
       : (DataFrame, DataFrame, Int) = {
     import org.apache.spark.sql.expressions.Window
-    org.apache.spark.sql.graftnative.ShinglesApi.ensureRegistered(s)
+    org.apache.spark.sql.graftnative.GraftNative.install(s)
     // Two deliberate moves here:
     // - shingling goes through the NATIVE `shingles` Generator (d7's
     //   UDTF), not the composed array expression: Catalyst collapses a
@@ -665,7 +665,7 @@ object Dedup {
     * (so they cannot silently diverge); sqlHash60 is its oracle twin.
     */
   private def hashedShingleToks(s: SparkSession, d: String): DataFrame = {
-    org.apache.spark.sql.graftnative.ShinglesApi.ensureRegistered(s)
+    org.apache.spark.sql.graftnative.GraftNative.install(s)
     documents(s, d)
       .select(col("doc_id"), col("lang"), col("source"),
               expr("shingles(text, 3)").as("shingle"))
@@ -728,7 +728,7 @@ object Dedup {
     * size), broadcast it onto the batch scan, and only bloom HITS need
     * the exact verification join. Uses Spark's own runtime-filter
     * expressions (`BloomFilterAggregate` / `BloomFilterMightContain`,
-    * registered by [[org.apache.spark.sql.graftnative.BloomApi]]) so
+    * registered by [[org.apache.spark.sql.graftnative.GraftNative]]) so
     * the probe is a codegen'd predicate in the scan stage.
     *
     * The batch is the held-out source plus a deterministic "re-crawl"
@@ -745,7 +745,7 @@ object Dedup {
     * false-positive rate.
     */
   val d13BloomDedup: Q = (s, d) => {
-    org.apache.spark.sql.graftnative.BloomApi.ensureRegistered(s)
+    org.apache.spark.sql.graftnative.GraftNative.install(s)
     val docsDf = documents(s, d)
     val hist = docsDf.filter(col("source") =!= "src0")
     val batch = docsDf.filter(col("source") === "src0")

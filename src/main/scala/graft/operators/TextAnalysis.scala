@@ -159,7 +159,7 @@ object TextAnalysis {
     * one-row table; the per-doc top-k window is partitioned by doc.
     */
   val t8Tfidf: Q = (s, d) => {
-    org.apache.spark.sql.graftnative.ShinglesApi.ensureRegistered(s)
+    org.apache.spark.sql.graftnative.GraftNative.install(s)
     import org.apache.spark.sql.expressions.Window
     val toks = documents(s, d)
       .select(col("doc_id"), expr("shingles(lower(text), 1)").as("term"))
@@ -581,7 +581,7 @@ object TextAnalysis {
     * pins the rewrite).
     */
   val t19Bm25: Q = (s, d) => {
-    org.apache.spark.sql.graftnative.ShinglesApi.ensureRegistered(s)
+    org.apache.spark.sql.graftnative.GraftNative.install(s)
     import org.apache.spark.sql.expressions.Window
     val qTerms = Seq("spark", "merge", "window", "the")
     val toks = documents(s, d)

@@ -155,12 +155,12 @@ object UdfSurface {
 
   /** The native `shingles` Generator through the SQL front end's
     * LATERAL VIEW syntax (d7 exercises the same UDTF via the
-    * DataFrame DSL): the table function registered by ShinglesApi must
+    * DataFrame DSL): the table function registered by GraftNative must
     * resolve and plan identically from SQL text — same codegen'd
     * Generate node, pipelined, no shuffle before the aggregate.
     */
   val u5SqlUdtf: Q = (s, d) => {
-    org.apache.spark.sql.graftnative.ShinglesApi.ensureRegistered(s)
+    org.apache.spark.sql.graftnative.GraftNative.install(s)
     graft.sources.Tables.documents(s, d)
       .createOrReplaceTempView("u5_documents")
     s.sql(

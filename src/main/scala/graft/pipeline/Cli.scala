@@ -63,18 +63,8 @@ object Cli {
         val dumpId = opts.get("dump-id").filter(_ != "latest")
           .orElse(cat.latestDumpId())
           .getOrElse(sys.error(s"no dumps under $root"))
-        val transformer = Transformer.load(
-          opts.getOrElse("transformer", classOf[IdentityTransformer].getName))
-        val store = new FileStateStore(opts.getOrElse("state-dir", s"$root/_state"))
-        val sink = new ParquetRecordSink(spark, req(opts, "sink"))
-        val result = new Reloader(spark, store)
-          .reload(req(opts, "topic"), cat.dumpPath(dumpId), dumpId, transformer, sink)
-        result match {
-          case HotReload(offsets) =>
-            println(s"hot reload: reset consumer group to $offsets (no data moved)")
-          case Reloaded(rows, state) =>
-            println(s"reloaded $rows rows; state saved: ${state.toJson}")
-        }
+        reloadAndReport(spark, opts, req(opts, "topic"), root,
+          cat.dumpPath(dumpId), dumpId, req(opts, "sink"))
 
       case "stream-dump" =>
         // continuous dump: drain the input directory as a stream into
@@ -127,18 +117,8 @@ object Cli {
           CorpusCodec.encode(docs), dest, dumpId,
           opts.getOrElse("max-per-file", "100000").toInt)
         println(s"dumped ${names.size} files under $dest/$dumpId")
-        val store = new FileStateStore(
-          opts.getOrElse("state-dir", s"$dest/_state"))
-        val transformer = Transformer.load(
-          opts.getOrElse("transformer", classOf[IdentityTransformer].getName))
-        new Reloader(spark, store).reload(
-            CorpusCodec.Topic, s"$dest/$dumpId", dumpId, transformer,
-            new ParquetRecordSink(spark, sinkDir)) match {
-          case HotReload(offsets) =>
-            println(s"hot reload: reset consumer group to $offsets (no data moved)")
-          case Reloaded(rows, state) =>
-            println(s"reloaded $rows rows; state saved: ${state.toJson}")
-        }
+        reloadAndReport(spark, opts, CorpusCodec.Topic, dest,
+          s"$dest/$dumpId", dumpId, sinkDir)
         CorpusCodec.decode(spark.read.parquet(sinkDir))
           .write.mode("overwrite").parquet(s"$corpusOut/documents.parquet")
         // the overwrite above replaces part files under a dir the
@@ -176,6 +156,25 @@ object Cli {
         System.err.println(
           s"unknown command '$other'; expected dump|reload|stream-dump|compact|pipeline|explain")
         sys.exit(2)
+    }
+  }
+
+  /** Reload one dump into a Parquet sink and print the outcome. The
+    * state store defaults to `<dest>/_state` and the transformer to
+    * the identity.
+    */
+  private def reloadAndReport(spark: SparkSession, opts: Map[String, String],
+      topic: String, dest: String, dumpDir: String, dumpId: String,
+      sinkDir: String): Unit = {
+    val store = new FileStateStore(opts.getOrElse("state-dir", s"$dest/_state"))
+    val transformer = Transformer.load(
+      opts.getOrElse("transformer", classOf[IdentityTransformer].getName))
+    new Reloader(spark, store).reload(topic, dumpDir, dumpId, transformer,
+        new ParquetRecordSink(spark, sinkDir)) match {
+      case HotReload(offsets) =>
+        println(s"hot reload: reset consumer group to $offsets (no data moved)")
+      case Reloaded(rows, state) =>
+        println(s"reloaded $rows rows; state saved: ${state.toJson}")
     }
   }
 

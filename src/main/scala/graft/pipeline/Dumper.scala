@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Dump side of the pipeline (kafka_client.py:207-257): records →
@@ -29,21 +29,10 @@ class Dumper(spark: SparkSession) {
       destDir: String,
       dumpId: String,
       maxPerFile: Int,
-      orderCols: Seq[String] = Seq("partition", "offset")): Seq[String] = {
-    val out = s"$destDir/$dumpId"
-    val ordered = {
-      val oc = orderCols.map(col)
-      val n = math.max(spark.sessionState.conf.numShufflePartitions, 1)
-      records.repartitionByRange(n, oc: _*).sortWithinPartitions(oc: _*)
-    }
-    ordered
-      .select(col("key").as("0"), col("value").as("1"))
-      .write.mode("overwrite")
-      .option("compression", "gzip")
-      .option("maxRecordsPerFile", maxPerFile.toLong)
-      .parquet(out)
-    renameToCumulative(out, dumpId)
-  }
+      orderCols: Seq[String] = Seq("partition", "offset")): Seq[String] =
+    writeOrdered(records, orderCols.map(col),
+      Seq(col("key").as("0"), col("value").as("1")),
+      s"$destDir/$dumpId", dumpId, maxPerFile)
 
   /** Compact a dump's small files into at-most-`maxPerFile`-row files,
     * preserving both catalog invariants (lexicographic file order ==
@@ -79,17 +68,10 @@ class Dumper(spark: SparkSession) {
       .select(col("0"), col("1"),
               col("_metadata.file_path").as("__f"),
               col("_metadata.row_index").as("__i"))
-    val n = math.max(spark.sessionState.conf.numShufflePartitions, 1)
     val tmp = s"$destDir/.$dumpId-compacting"
     fs.delete(new HPath(tmp), true)
-    df.repartitionByRange(n, col("__f"), col("__i"))
-      .sortWithinPartitions(col("__f"), col("__i"))
-      .select(col("0"), col("1"))
-      .write.mode("overwrite")
-      .option("compression", "gzip")
-      .option("maxRecordsPerFile", maxPerFile.toLong)
-      .parquet(tmp)
-    val names = renameToCumulative(tmp, dumpId)
+    val names = writeOrdered(df, Seq(col("__f"), col("__i")),
+      Seq(col("0"), col("1")), tmp, dumpId, maxPerFile)
     val old = new HPath(s"$dir.old")
     fs.delete(old, true)
     if (!fs.rename(new HPath(dir), old))
@@ -100,6 +82,24 @@ class Dumper(spark: SparkSession) {
     }
     fs.delete(old, true)
     names
+  }
+
+  /** The one dump file writer: range-partition and sort on `order`,
+    * project `cols`, write gzip Parquet in files of at most `maxPerFile`
+    * rows, then apply the cumulative naming. Every dump file, fresh or
+    * compacted, is written here.
+    */
+  private def writeOrdered(df: DataFrame, order: Seq[Column],
+      cols: Seq[Column], out: String, dumpId: String,
+      maxPerFile: Int): Seq[String] = {
+    val n = math.max(spark.sessionState.conf.numShufflePartitions, 1)
+    df.repartitionByRange(n, order: _*).sortWithinPartitions(order: _*)
+      .select(cols: _*)
+      .write.mode("overwrite")
+      .option("compression", "gzip")
+      .option("maxRecordsPerFile", maxPerFile.toLong)
+      .parquet(out)
+    renameToCumulative(out, dumpId)
   }
 
   /** Rename part-* files (lexicographic = global row order after the

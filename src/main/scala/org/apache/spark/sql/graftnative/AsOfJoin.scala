@@ -3,7 +3,7 @@
 package org.apache.spark.sql.graftnative
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
   Alias, And, Ascending, Attribute, BoundReference, Expression,
@@ -678,7 +678,7 @@ object AsOfJoinApi {
         s"as-of direction must be backward, forward or nearest, got '$other'")
     }
     val session = left.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    ensureRegistered(session)
+    GraftNative.install(session)
     val lPlan = left.queryExecution.analyzed
     val rAnalyzed = right.queryExecution.analyzed
     // fresh exprIds for the right side (self-join safety)
@@ -732,16 +732,5 @@ object AsOfJoinApi {
       rightTieBreakCols.map(attr(rPlan.output, _)),
       outer, forward, nearest, toleranceMicros)
     org.apache.spark.sql.classic.Dataset.ofRows(session, plan)
-  }
-
-  /** Idempotently register strategy + rule on sessions not built with
-    * GraftExtensions (the driver's Verify/Bench sessions).
-    */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    if (!exp.extraStrategies.contains(AsOfJoinStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ AsOfJoinStrategy
-    if (!exp.extraOptimizations.contains(PushFilterThroughAsOfJoin))
-      exp.extraOptimizations = exp.extraOptimizations :+ PushFilterThroughAsOfJoin
   }
 }

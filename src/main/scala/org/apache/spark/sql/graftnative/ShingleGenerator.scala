@@ -1,9 +1,7 @@
-// Lives in an org.apache.spark.sql subpackage to reach private[sql]
-// surfaces (sessionState.functionRegistry) — same pattern as the
-// sibling native expressions.
+// Lives in an org.apache.spark.sql subpackage beside the sibling
+// native expressions; GraftNative registers it as `shingles`.
 package org.apache.spark.sql.graftnative
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{
@@ -120,14 +118,4 @@ object ShingleOps {
       new GenericArrayData(out)
     }
   }
-}
-
-object ShinglesApi {
-  /** Idempotently register `shingles` on sessions not built with
-    * GraftExtensions (the driver's Verify/Bench sessions).
-    */
-  def ensureRegistered(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.createOrReplaceTempFunction(
-        "shingles", exprs => Shingles(exprs(0), exprs(1)), "built-in")
 }

@@ -39,7 +39,7 @@ class CosineSimilaritySpec extends AnyFunSuite {
   }
 
   test("registered SQL function works and survives codegen") {
-    VectorFunctions.register(spark)
+    org.apache.spark.sql.graftnative.GraftNative.install(spark)
     pairs().createOrReplaceTempView("graft_cos_pairs")
     val n = spark.sql(
       "SELECT qid, cid, cosine_sim(qe, ce) AS s FROM graft_cos_pairs WHERE cosine_sim(qe, ce) > -2")

@@ -33,8 +33,8 @@ class GateArtifactsSpec extends AnyFunSuite {
       .findAllMatchIn(doc).map(_.group(1)).toSeq
     assert(passes.size >= 3, s"only ${passes.size} sf30 gate rows recorded")
     assert(passes.forall(_ == "true"),
-      "an sf30 gate row is non-pass — re-run the GenSf30Gate runbook " +
-        "(see its scaladoc) and fix before re-committing")
+      "an sf30 gate row is non-pass — re-run the GenCorpus sf30 runbook " +
+        "(see .claude/skills/verify) and fix before re-committing")
     // the merge guard needs the corpus fingerprint to refuse
     // cross-generation mixes; its absence means a hand-edited artifact
     assert(doc.contains("corpus_scheme"),
@@ -53,8 +53,8 @@ class GateArtifactsSpec extends AnyFunSuite {
       .findAllMatchIn(doc).map(_.group(1)).toSeq
     assert(passes.size >= 3, s"only ${passes.size} sf100 gate rows recorded")
     assert(passes.forall(_ == "true"),
-      "an sf100 gate row is non-pass — re-run the GenSf100Full runbook " +
-        "(see its scaladoc) and fix before re-committing")
+      "an sf100 gate row is non-pass — re-run the GenCorpus sf100 runbook " +
+        "(see .claude/skills/verify) and fix before re-committing")
     assert(doc.contains("corpus_scheme"),
       "sf100 artifact lost its corpus_scheme stamp")
   }

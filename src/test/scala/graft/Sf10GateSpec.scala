@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the committed CORRECTNESS_SF10.json artifact — the r9 exact
   * oracle gate for the heaviest d/t/n/g queries at sf10 (500k docs,
-  * 100 structure-preserving copies of sf0.1; see GenSf10Gate and the
+  * 100 structure-preserving copies of sf0.1; see GenCorpus and the
   * per-query-isolated runner tools/gate_isolated.py). The driver's
   * own gate runs at sf0.01 and ~sf1; this artifact is the evidence
   * that the heavy-family semantics stay EXACT a further decade up,
@@ -15,7 +15,7 @@ class Sf10GateSpec extends AnyFunSuite {
   private lazy val doc: String = {
     val p = java.nio.file.Paths.get("CORRECTNESS_SF10.json")
     assert(java.nio.file.Files.exists(p),
-      "CORRECTNESS_SF10.json missing — run GenSf10Gate + Verify + " +
+      "CORRECTNESS_SF10.json missing — run GenCorpus sf10 + Verify + " +
         "tools/gate_isolated.py (recipe in .claude/skills/verify)")
     new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
   }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftnative.ShinglesApi
+import org.apache.spark.sql.graftnative.GraftNative
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Native shingles Generator: values match the composed HOF form,
@@ -17,7 +17,7 @@ class ShinglesSpec extends AnyFunSuite {
       |             i -> concat_ws(' ', element_at(ws, i), element_at(ws, i+1), element_at(ws, i+2))))""".stripMargin
 
   test("generator output matches the composed HOF shingles") {
-    ShinglesApi.ensureRegistered(spark)
+    GraftNative.install(spark)
     val df = Seq(
       "the quick brown fox jumps",
       "one two",
@@ -34,7 +34,7 @@ class ShinglesSpec extends AnyFunSuite {
   }
 
   test("n=2 and n=5 shingle widths") {
-    ShinglesApi.ensureRegistered(spark)
+    GraftNative.install(spark)
     val df = Seq("a b c d").toDF("text")
     assert(df.select(expr("shingles(text, 2)").as("s"))
       .collect().map(_.getString(0)).toSeq == Seq("a b", "b c", "c d"))
@@ -47,7 +47,7 @@ class ShinglesSpec extends AnyFunSuite {
   }
 
   test("null text emits no rows; plan is a Generate node") {
-    ShinglesApi.ensureRegistered(spark)
+    GraftNative.install(spark)
     val df = Seq(Option("a b c d"), None).toDF("text")
     val out = df.select(expr("shingles(text, 3)").as("shingle"))
     assert(out.count() == 2) // only the non-null doc's 2 shingles
@@ -56,14 +56,14 @@ class ShinglesSpec extends AnyFunSuite {
   }
 
   test("null or non-positive width emits no rows instead of crashing") {
-    ShinglesApi.ensureRegistered(spark)
+    GraftNative.install(spark)
     val df = Seq(("a b c d", Option(0)), ("a b c d", Option(-2)),
                  ("a b c d", Option.empty[Int])).toDF("text", "k")
     assert(df.select(expr("shingles(text, k)")).count() == 0)
   }
 
   test("generator participates in whole-stage codegen (no silent fallback)") {
-    ShinglesApi.ensureRegistered(spark)
+    GraftNative.install(spark)
     val prevFb = spark.conf.get("spark.sql.codegen.fallback")
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     try {
@@ -96,7 +96,7 @@ class ShinglesSpec extends AnyFunSuite {
   }
 
   test("mistyped arguments fail at analysis, not on the executor") {
-    ShinglesApi.ensureRegistered(spark)
+    GraftNative.install(spark)
     val df = Seq(("a b c", 3)).toDF("text", "k")
     val e1 = intercept[Exception] {
       df.select(expr("shingles(k, 3)")).collect()
